@@ -157,8 +157,6 @@ object Main {
         val spark = SparkSession.builder()
           .appName(s"graft-readport")
           .config("spark.master", sys.props.getOrElse("spark.master", "local[*]"))
-          .config("spark.sql.shuffle.partitions",
-            sys.props.getOrElse("spark.sql.shuffle.partitions", "32"))
           .getOrCreate()
         val q =
           try startFromConfig(spark, a.config.get, a.debug)

@@ -24,6 +24,12 @@ import org.apache.spark.sql.types._
   * this matches its envelope; SURVEY.md §7 "hard parts" (b)). For
   * deterministic batch testing, sort upstream.
   *
+  * Partitioning: a device stream is one ordered source partition with
+  * 1 to 4 keys, so [[IngestPipeline]] runs it on ONE state-store
+  * partition; each further partition would only add a state-store
+  * commit per trigger. A checkpoint keeps the partition count its
+  * offset log recorded, so older checkpoints resume unchanged.
+  *
   * State size: groups × packLength × row width — identical to the
   * reference's bound (readport.py:264-269, ≈0.5 MB/device) and far
   * below state-store limits even at 1000 devices.

@@ -2,9 +2,9 @@ package graft.streaming
 
 import graft.config.DeviceConfig
 import graft.functions.RegexExtractNamed.regexp_extract_named
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 /** Config-compiled ingest pipeline — the whole reference engine
   * (readport.py §3.1 lifecycle) as one declarative streaming plan:
@@ -17,6 +17,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * source/task decoupling; its fail-fast backpressure (X2) to trigger
   * admission control; graceful drain (X3) to `query.stop()` +
   * checkpoint recovery.
+  *
+  * Both entry points start a stream on one state-store partition and
+  * with its own local-filesystem classes (`streamConf`): each trigger
+  * commits offset, state and pack files, and stock Hadoop without its
+  * native library forks a `chmod` or `readlink` for nearly every one.
   */
 object IngestPipeline {
 
@@ -92,23 +97,19 @@ object IngestPipeline {
     */
   def start(spark: SparkSession, cfg: DeviceConfig, dest: String,
       checkpoint: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery = {
-    val parsed = parseStage(
-      rawStream(spark, cfg.host, cfg.port, cfg.timeoutSec, cfg.maxPerTrigger,
-        cfg.walMaxSegments), cfg)
-    val keyed = cfg.groupBy match {
-      case Some(g) => parsed
-      case None    => parsed.withColumn("_device", lit(cfg.device))
-    }
-    val keyCol = cfg.groupBy.map(_.name).getOrElse("_device")
-    val packed = CountWindow.packByCount(keyed, keyCol, cfg.packLength)
+      trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
+    withStreamConf(spark)(partitionedWriter(spark, cfg, dest, checkpoint, trigger).start())
+
+  /** [[start]]'s query, unstarted, under the caller's session settings. */
+  private[streaming] def partitionedWriter(spark: SparkSession, cfg: DeviceConfig,
+      dest: String, checkpoint: String, trigger: Trigger): DataStreamWriter[Row] = {
+    val (packed, keyCol) = packedStream(spark, cfg)
     packed.writeStream
       .format("parquet")
       .option("path", dest)
       .option("checkpointLocation", checkpoint)
       .partitionBy(keyCol, "pack_seq")
       .trigger(trigger)
-      .start()
   }
 
   /** Exact filename parity with the reference (P7/K1,
@@ -121,16 +122,8 @@ object IngestPipeline {
     */
   def startWithFilenameTemplate(spark: SparkSession, cfg: DeviceConfig,
       dest: String, checkpoint: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery = {
-    val parsed = parseStage(
-      rawStream(spark, cfg.host, cfg.port, cfg.timeoutSec, cfg.maxPerTrigger,
-        cfg.walMaxSegments), cfg)
-    val keyed = cfg.groupBy match {
-      case Some(_) => parsed
-      case None    => parsed.withColumn("_device", lit(cfg.device))
-    }
-    val keyCol = cfg.groupBy.map(_.name).getOrElse("_device")
-    val packed = CountWindow.packByCount(keyed, keyCol, cfg.packLength)
+      trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery = withStreamConf(spark) {
+    val (packed, keyCol) = packedStream(spark, cfg)
     packed.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // persist BEFORE multiple actions: re-evaluating a stateful
@@ -161,4 +154,42 @@ object IngestPipeline {
       .trigger(trigger)
       .start()
   }
+
+  /** Socket → parse → count-window pack, and the key column it packs by. */
+  private def packedStream(spark: SparkSession, cfg: DeviceConfig): (DataFrame, String) = {
+    val parsed = parseStage(
+      rawStream(spark, cfg.host, cfg.port, cfg.timeoutSec, cfg.maxPerTrigger,
+        cfg.walMaxSegments), cfg)
+    val keyCol = cfg.groupBy.map(_.name).getOrElse("_device")
+    val keyed =
+      if (cfg.groupBy.isDefined) parsed else parsed.withColumn("_device", lit(cfg.device))
+    (CountWindow.packByCount(keyed, keyCol, cfg.packLength), keyCol)
+  }
+
+  /** Set on the session while a device stream starts: one state-store
+    * partition, as a device is one ordered source partition with 1 to 4
+    * keys ([[CountWindow]]), and the subprocess-free local filesystem of
+    * [[graft.fs]] for `file:` paths. The FileSystem cache is bypassed, as
+    * the JVM-wide cache would hand back its stock instance.
+    */
+  private val streamConf = Seq(
+    "spark.sql.shuffle.partitions" -> "1",
+    "fs.AbstractFileSystem.file.impl" -> classOf[graft.fs.NioLocalFs].getName,
+    "fs.file.impl" -> classOf[graft.fs.NioLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true")
+
+  /** Run `start` under [[streamConf]], then restore the caller's values
+    * (also when it throws). The query clones the session conf as it is
+    * constructed, so the stream keeps the settings; a restarted one keeps
+    * the partition count its offset log recorded.
+    */
+  private def withStreamConf(spark: SparkSession)(start: => StreamingQuery): StreamingQuery =
+    streamConf.synchronized {
+      val before = spark.conf.getAll
+      streamConf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try start
+      finally streamConf.foreach { case (k, _) =>
+        before.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
+      }
+    }
 }
